@@ -25,9 +25,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * Serving reads go through `store.lookupRows(prefix)` — a
   * point-in-time read per request with the store as the consistency
   * boundary (micro-batch upserts are atomic per key). For the
-  * partitioned parquet store that is a PRUNED scan (gran/pday
-  * partition predicates derived from the prefix), the reference's
-  * O(1)-per-key Redis read re-expressed as partition pruning.
+  * partitioned parquet store that is a direct, in-process read of
+  * only the gran/pday partitions the prefix can touch, with no Spark
+  * job: the reference's O(1)-per-key Redis read re-expressed as
+  * partition pruning.
   */
 object HttpServing {
 
@@ -50,12 +51,15 @@ object HttpServing {
       s""""${esc(r.key)}": {"n_events": ${r.nEvents}, "sum_value": ${jsonNum(r.sumValue)}}"""
     }.mkString("{", ", ", "}")
 
-  /** Render the aggregate answer for one prefix (empty → nulls). */
+  /** Render the aggregate answer for one prefix (empty → nulls). The
+    * double sum runs in key order, so the answer does not depend on
+    * the order a store returns its rows in.
+    */
   def aggJson(rows: Seq[ServingStore.CounterRow]): String =
     if (rows.isEmpty) """{"n_events": null, "sum_value": null, "n_keys": 0}"""
     else {
       val n = rows.map(_.nEvents).sum
-      val v = rows.map(_.sumValue).sum
+      val v = rows.sortBy(_.key).map(_.sumValue).sum
       s"""{"n_events": $n, "sum_value": ${jsonNum(v)}, "n_keys": ${rows.size}}"""
     }
 

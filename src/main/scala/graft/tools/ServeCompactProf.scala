@@ -12,9 +12,9 @@ import graft.streaming.{ParquetServingStore, ServingStore}
   * through a month — so every key is re-emitted many times and the
   * latest-batch-wins merge has real resolution work. At checkpoints of
   * accumulated batch count, measures the point-lookup latency
-  * (`lookup("click/hour/<day>")` — the reference's GET analog) and the
-  * full-store resolve (`latest().count`), min over passes; then
-  * compacts (retain 2) and re-measures.
+  * (`lookupRows("click/hour/<day>")` — the read `HttpServing` serves a
+  * GET with) and the full-store resolve (`latest().count`), min over
+  * passes; then compacts (retain 2) and re-measures.
   *
   *   sbt "runMain graft.tools.ServeCompactProf [maxBatches]"
   */
@@ -39,9 +39,9 @@ object ServeCompactProf {
         (1 to 5).map { _ =>
           val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
         }.min
-      val lk = minOf(store.lookup(probe).queryExecution.toRdd.count())
+      val lk = minOf(store.lookupRows(probe))
       val full = minOf(store.latest().queryExecution.toRdd.count())
-      println(f"$tag%-28s dirs=${store.batchDirCount}%4d  lookup=$lk%.3f s  full-resolve=$full%.3f s")
+      println(f"$tag%-28s dirs=${store.batchDirCount}%4d  lookup=${lk * 1000}%.1f ms  full-resolve=$full%.3f s")
     }
 
     val checkpoints = Set(10, 50, 100, maxBatches)

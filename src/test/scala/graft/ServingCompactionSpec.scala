@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.{ParquetServingStore, ServingStore}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Serving-store compaction + retention (round 15, VERDICT r14 #3;
   * redesigned after the round-15 review to a VERSIONED BASE outside
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * idempotence — including a replay of a batch compaction already
   * FOLDED — and crash-window convergence (dominated dirs left behind
   * by an interrupted pass read identically and a re-run removes
-  * them). The latency side is measured by tools/ServeCompactProf →
-  * SCALING.md.
+  * them), and a serving read racing compaction cycles. The latency
+  * side is measured by tools/ServeCompactProf → SCALING.md.
   */
 class ServingCompactionSpec extends SparkSpec {
 
@@ -161,6 +162,41 @@ class ServingCompactionSpec extends SparkSpec {
     store.compact(retainBatches = 0, foldMaintenance = true)
     assert(store.batchDirCount == 0)
     assert(store.lookupRows("click/year/2024").map(_.nEvents) == Seq(100L))
+  }
+
+  test("lookupRows racing merge + compact() cycles (sweeps included) never " +
+      "fails and never reads a counter backwards") {
+    val store = new ParquetServingStore(spark, SparkEnv.scratchDir("compact-race"))
+    val marker = "probe/year/2024"
+    // each batch re-emits the marker's running count plus hour keys
+    // over 8 days, so every fold and sweep handles many partition dirs
+    def batch(b: Int) = row(marker, b + 1L, b.toDouble) +:
+      (for (d <- 1 to 8; h <- 0 until 3)
+        yield row(f"click/hour/2024-01-${d + b % 9}%02d-$h%02d", b, 1.0))
+    @volatile var running = true
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val reader = new Thread(() =>
+      while (running) {
+        try {
+          seen += store.lookupRows(marker).headOption.fold(0L)(_.nEvents)
+          store.batchDirCount // the maintenance trigger, read alongside
+        } catch { case e: Throwable => errors.add(e) }
+      })
+    reader.start()
+    val cycles = 6 // every compact() after the first sweeps the previous fold
+    try (0 until cycles).foreach { c =>
+      (0 until 3).foreach(i => store.merge(c * 3L + i, batch(c * 3 + i)))
+      store.compact(retainBatches = 1)
+    } finally {
+      running = false
+      reader.join()
+    }
+    assert(errors.isEmpty, errors.asScala.take(3).mkString("; "))
+    assert(seen.size > cycles, s"only ${seen.size} reads")
+    val falls = seen.sliding(2).filter(w => w.last < w.head).toSeq
+    assert(falls.isEmpty, s"marker count fell: ${falls.take(5)}")
+    assert(store.lookupRows(marker).map(_.nEvents) == Seq(cycles * 3L))
   }
 
   test("compaction of a decommissioned stream (retain 0) folds everything " +
